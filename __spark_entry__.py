@@ -661,6 +661,9 @@ def q_knn_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     qrows = (
         emb.filter(F.col("vec_id") < ANN_NQ).select("vec_id", "embedding").collect()
     )
+    if not qrows:  # no query vectors: an empty top-k, schema as below
+        return spark.createDataFrame(
+            [], "q_id long, rank int not null, nbr_id long, sim double")
     qids = np.array([r[0] for r in qrows], dtype=np.int64)
     # quantize to integer-valued doubles (floor(x*1024); *1024 is exact) so
     # every dot product / norm is an exact small-integer sum — bit-identical

@@ -86,6 +86,7 @@ def word_bigrams(docs: DataFrame, text_col: str = "text",
             F.col(id_col).alias("_id"),
             F.split(F.trim(F.col(text_col)), r"\s+").alias("_ws"),
         )
+        .filter(F.col("_ws").isNotNull())  # null text has no grams
         .select(
             "_id", "_ws",
             F.explode(

@@ -1,13 +1,18 @@
-"""Checkpointed, resumable pipeline stages with per-partition lineage.
+"""Checkpointed, resumable pipeline stages with per-file lineage.
 
 North-rule realization (BASELINE.json: "resumable from checkpoint with
 per-partition lineage + metrics"). On Iceberg the commit is a snapshot; in
 the sandbox the same contract is realized with atomic parquet directories:
 
-- each stage writes its output parquet, then a ``_lineage`` parquet holding
-  per-partition row counts + key ranges + wall time, then a ``_STAGE_OK``
-  marker — marker last, so a crash anywhere leaves the stage incomplete and
-  a re-run recomputes it (write-ahead ordering = snapshot-commit analog);
+- each stage writes its output parquet, then a ``_lineage`` parquet with
+  one row per written data file (writer partition id, row count, key
+  range), then a ``_STAGE_OK`` marker — marker last, so a crash anywhere
+  leaves the stage incomplete and a re-run recomputes it (write-ahead
+  ordering = snapshot-commit analog);
+- ``_lineage`` is the analog of Iceberg's data-file metrics: like Iceberg,
+  it is built from the files just written, here from their parquet footers
+  (``num_rows`` and the key column's row-group min/max statistics), read on
+  the driver — nothing after the data write launches a Spark job;
 - ``run_stage`` short-circuits to the committed output when the marker
   exists: any failed run resumes from the last committed stage.
 """
@@ -16,10 +21,29 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    BinaryType,
+    DateType,
+    IntegralType,
+    StringType,
+    StructType,
+)
+
+# the Spark schema the writer stores in every footer (what schema
+# inference would read back)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
+# key types whose footer statistics pyarrow decodes in Spark's order;
+# floats are left out on purpose: parquet statistics and Spark's min/max
+# order NaN differently
+_KEY_TYPES = (IntegralType, StringType, BinaryType, DateType)
 
 
 def _marker(path: str) -> str:
@@ -30,13 +54,46 @@ def stage_is_committed(path: str) -> bool:
     return os.path.exists(_marker(path))
 
 
-def partition_lineage(df: DataFrame, key_col: str | None = None) -> DataFrame:
-    """(partition_id, n_rows[, key_min, key_max]) per partition."""
-    df2 = df.withColumn("_pid", F.spark_partition_id())
-    aggs = [F.count("*").alias("n_rows")]
+def _key_range(md: pq.FileMetaData, col: int, path: str) -> tuple:
+    """(min, max) of leaf column ``col`` over the file's row-group
+    statistics; (None, None) when every key is null."""
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        st = rg.column(col).statistics
+        if st is not None and st.has_min_max:
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        elif st is None or st.null_count != rg.num_rows:
+            raise ValueError(f"{path}: row group {g} has non-null keys but "
+                             "no min/max statistics")
+    return lo, hi
+
+
+def _footer_lineage(data_dir: str, key_col: str | None) -> tuple[pa.Table, StructType]:
+    """The ``_lineage`` table and the Spark schema of a written stage, from
+    the footers of its ``part-*.parquet`` files."""
+    footers = []
+    for name in sorted(os.listdir(data_dir)):
+        m = _PART_FILE.match(name)
+        if m:
+            path = os.path.join(data_dir, name)
+            footers.append((int(m.group(1)), path, pq.read_metadata(path)))
+    md0 = footers[0][2]
+    schema = StructType.fromJson(json.loads(md0.metadata[_SPARK_SCHEMA_KEY]))
+    written = [(pid, path, md) for pid, path, md in footers if md.num_rows]
+    cols = {
+        "partition_id": pa.array([pid for pid, _, _ in written], pa.int32()),
+        "n_rows": pa.array([md.num_rows for _, _, md in written], pa.int64()),
+    }
     if key_col:
-        aggs += [F.min(key_col).alias("key_min"), F.max(key_col).alias("key_max")]
-    return df2.groupBy("_pid").agg(*aggs).withColumnRenamed("_pid", "partition_id")
+        col = [md0.schema.column(i).path
+               for i in range(md0.num_columns)].index(key_col)
+        key_type = md0.schema.to_arrow_schema().field(key_col).type
+        ranges = [_key_range(md, col, path) for _, path, md in written]
+        cols["key_min"] = pa.array([lo for lo, _ in ranges], key_type)
+        cols["key_max"] = pa.array([hi for _, hi in ranges], key_type)
+    return pa.table(cols), schema
 
 
 def run_stage(
@@ -50,30 +107,35 @@ def run_stage(
 
     Returns the stage output DataFrame (reading the committed parquet). The
     lineage table lands at ``{out_dir}/_lineage`` and run metrics in the
-    marker JSON.
+    marker JSON. ``key_col`` must be an integral, string, binary or date
+    column, else ``ValueError``.
     """
     data_dir = os.path.join(out_dir, "data")
     if stage_is_committed(out_dir):
         return spark.read.parquet(data_dir)
     t0 = time.time()
     df = build()
+    if key_col and not isinstance(df.schema[key_col].dataType, _KEY_TYPES):
+        raise ValueError(f"key_col {key_col!r} has unsupported type "
+                         f"{df.schema[key_col].dataType.simpleString()}")
     df.write.mode("overwrite").parquet(data_dir)
-    out = spark.read.parquet(data_dir)
-    lineage = partition_lineage(out, key_col)
-    lineage.write.mode("overwrite").parquet(os.path.join(out_dir, "_lineage"))
-    n_rows = out.count()
+    lineage, schema = _footer_lineage(data_dir, key_col)
+    lin_dir = os.path.join(out_dir, "_lineage")
+    shutil.rmtree(lin_dir, ignore_errors=True)
+    os.makedirs(lin_dir)
+    pq.write_table(lineage, os.path.join(lin_dir, "part-00000.parquet"))
     wall = time.time() - t0
     with open(_marker(out_dir), "w") as f:
         json.dump(
             {
                 "stage": stage_name or os.path.basename(out_dir),
-                "rows": n_rows,
+                "rows": sum(lineage["n_rows"].to_pylist()),
                 "wall_sec": round(wall, 3),
                 "committed_at": time.time(),
             },
             f,
         )
-    return out
+    return spark.read.schema(schema).parquet(data_dir)
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:

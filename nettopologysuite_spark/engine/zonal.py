@@ -168,9 +168,11 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
             "w": [wkb_dumps(coverage_union(squares))],
         })
 
+    # a partial last tile counts: ix >> tile_shift reaches (n - 1) >> tile_shift
+    tiles_per_side = ((n - 1) >> tile_shift) + 1
     tiled = reg.withColumn(
         "tile",
-        (F.shiftright(F.col("iy"), tile_shift) * (n >> tile_shift)
+        (F.shiftright(F.col("iy"), tile_shift) * tiles_per_side
          + F.shiftright(F.col("ix"), tile_shift)),
     )
     part_schema = "region_id long, tile long, value long, n_px long, w binary"
@@ -194,7 +196,7 @@ def raster_polygonize(pixels: DataFrame, n: int, extent: float = 100.0,
     # merge rounds until any region's partial count fits one task: the
     # worst case is a region covering the whole tile grid, so the round
     # count derives statically from the grid size — no counting jobs
-    groups = (n >> tile_shift) ** 2
+    groups = tiles_per_side ** 2
     while groups > fanin:
         partials = partials.withColumn(
             "tile", F.floor(F.col("tile") / fanin).cast("long")

@@ -13,7 +13,7 @@ any failure resumes from the last committed stage):
 
 1. ``docs``   — synthesize/ingest the interleaved docs table
 2. ``joined`` — tile assignment + broadcast cell join + exact PIP refine,
-   per-partition lineage keyed by cell_id
+   per-file lineage keyed by cell_id
 3. ``summary`` — per-polygon match counts (the reporting aggregate)
 """
 

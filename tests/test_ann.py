@@ -217,3 +217,20 @@ def test_knn_graph_hot_bucket_cap(spark, sf_dir):
     clone_ids = {50_000 + i for i in range(30)}
     assert len(uncapped & clone_ids) == 30
     assert len(got & clone_ids) < 30  # mega-bucket candidates were dropped
+
+
+def test_knn_embedding_without_query_ids(spark, sf_dir, tmp_path):
+    """An embeddings table with no ``vec_id < ANN_NQ`` has no query set:
+    the brute-force top-k is empty with the usual schema, like the ANN
+    paths, instead of failing on an empty query matrix."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path)
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    emb.withColumn("vec_id", F.col("vec_id") + 1000).write.parquet(
+        f"{d}/embeddings.parquet")
+    got = E.q_knn_embedding(spark, d)
+    assert got.schema == E.q_knn_embedding(spark, sf_dir).schema
+    assert got.count() == 0
+    assert E.q_ann_lsh(spark, d).count() == 0
+    assert E.q_ann_ivf(spark, d).count() == 0

@@ -115,6 +115,146 @@ def test_checkpoint_resume(spark, tmp_path):
     assert calls["n"] == 2
 
 
+def _spark_file_lineage(spark, data_dir, key_col):
+    """Per-file (partition_id, n_rows, key_min, key_max) the Spark way: a
+    groupBy over input_file_name() of the written data."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    rows = (
+        spark.read.parquet(data_dir)
+        .groupBy(F.input_file_name().alias("f"))
+        .agg(F.count("*").alias("n"), F.min(key_col).alias("lo"),
+             F.max(key_col).alias("hi"))
+        .collect()
+    )
+    return {(int(re.search(r"part-(\d+)-", r["f"]).group(1)), r["n"], r["lo"],
+             r["hi"]) for r in rows}
+
+
+def _check_footer_lineage(spark, out_dir, rows, ddl, parts):
+    """Run a stage over ``rows`` in ``parts`` slices (more slices than rows
+    leaves some empty) and compare its footer lineage, marker and returned
+    schema with what Spark computes from the written data."""
+    import json
+    import os
+
+    from nettopologysuite_spark.engine.lineage import read_lineage, run_stage
+
+    def build():
+        return spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), ddl)
+
+    out = run_stage(spark, out_dir, build, key_col="k")
+    data_dir = os.path.join(out_dir, "data")
+    assert out.schema == spark.read.parquet(data_dir).schema
+    got = {(r["partition_id"], r["n_rows"], r["key_min"], r["key_max"])
+           for r in read_lineage(spark, out_dir).collect()}
+    assert got == _spark_file_lineage(spark, data_dir, "k")
+    assert len(got) == len({pid for pid, *_ in got})  # one row per file
+    with open(os.path.join(out_dir, "_STAGE_OK")) as f:
+        assert json.load(f)["rows"] == len(rows)
+
+
+_LONGS = [-(2 ** 63), 2 ** 63 - 1, -1, 0, 1, 2 ** 40]
+_NON_ASCII = ["", "a", "Z", "é", "ü", "ß", "日本", "日", "Ωmega", "\U0001F600",
+              "zz\x00", "ÿ"]
+
+
+@pytest.mark.parametrize("ddl", ["k long, v long", "k string, v long"])
+def test_footer_lineage_matches_spark(spark, tmp_path_factory, ddl):
+    """Property: for random keys (extremes, non-ASCII, nulls) over random
+    slice counts, footer lineage equals Spark's per-file aggregate."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    keys = (st.one_of(st.sampled_from(_LONGS), st.integers(-(2 ** 63), 2 ** 63 - 1))
+            if ddl.startswith("k long")
+            else st.one_of(st.sampled_from(_NON_ASCII), st.text(max_size=6)))
+
+    @settings(max_examples=6, deadline=None)
+    @given(ks=st.lists(st.one_of(st.none(), keys), max_size=30),
+           parts=st.integers(1, 12))
+    def check(ks, parts):
+        d = str(tmp_path_factory.mktemp("lineage"))
+        _check_footer_lineage(spark, d, [(k, i) for i, k in enumerate(ks)], ddl, parts)
+
+    check()
+
+
+def test_footer_lineage_edge_shapes(spark, tmp_path):
+    """Fixed edge shapes: all-null keys, empty partitions next to full
+    ones, non-ASCII ordering, and a zero-row stage (marker rows 0, empty
+    ``_lineage``)."""
+    from nettopologysuite_spark.engine.lineage import read_lineage
+
+    _check_footer_lineage(spark, str(tmp_path / "nulls"),
+                          [(None, 1), (None, 2), (3, 3)], "k long, v long", 2)
+    _check_footer_lineage(spark, str(tmp_path / "sparse"),
+                          [(5, 1), (-7, 2)], "k long, v long", 9)
+    _check_footer_lineage(spark, str(tmp_path / "utf8"),
+                          [(k, i) for i, k in enumerate(_NON_ASCII)],
+                          "k string, v long", 3)
+    _check_footer_lineage(spark, str(tmp_path / "empty"), [], "k long, v long", 4)
+    lin = read_lineage(spark, str(tmp_path / "empty"))
+    assert lin.count() == 0
+    assert lin.columns == ["partition_id", "n_rows", "key_min", "key_max"]
+
+
+def test_run_stage_rejects_unsupported_keys(spark, tmp_path):
+    """Float keys (NaN orders differently in parquet statistics and Spark)
+    and keys the writer keeps no min/max statistics for (strings over 4 KiB)
+    fail loudly instead of giving a wrong key range."""
+    import os
+
+    from nettopologysuite_spark.engine.lineage import run_stage, stage_is_committed
+
+    for name, expr in (("f", "CAST(id AS FLOAT)"), ("d", "CAST(id AS DOUBLE)")):
+        d = str(tmp_path / name)
+        with pytest.raises(ValueError, match="unsupported type"):
+            run_stage(spark, d, lambda: spark.range(3).selectExpr(f"{expr} AS k"),
+                      key_col="k")
+        assert not os.path.exists(d)  # refused before anything was written
+    d = str(tmp_path / "long_str")
+    with pytest.raises(ValueError, match="no min/max statistics"):
+        run_stage(spark, d,
+                  lambda: spark.range(3).selectExpr("repeat('x', 5000) || id AS k"),
+                  key_col="k")
+    assert not stage_is_committed(d)
+
+
+def test_run_stage_launches_no_job_after_write(spark, tmp_path, monkeypatch):
+    """Lineage, marker and the returned frame come from the footers: no
+    Spark job runs between the end of the data write and the return."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from nettopologysuite_spark.engine.lineage import run_stage
+
+    sc = spark.sparkContext
+
+    def job_ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts are async
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    after_write = {}
+    write_parquet = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        write_parquet(self, path, *args, **kwargs)
+        after_write[path] = job_ids()
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    out_dir = str(tmp_path / "s")
+    out = run_stage(spark, out_dir,
+                    lambda: spark.range(1000).selectExpr("id", "id % 7 AS k")
+                    .repartition(4),
+                    key_col="k")
+    assert out.schema.names == ["id", "k"]
+    assert job_ids() - after_write[os.path.join(out_dir, "data")] == set()
+
+
 def test_simhash_near_dup_property(spark, sf_dir):
     """SimHash of identical text is identical; fingerprints are stable."""
     from nettopologysuite_spark.engine.dedup import simhash_fingerprints
@@ -538,3 +678,34 @@ def test_raster_polygonize_bounded_fanin_giant_region(spark):
     g = wkb_loads(bytes(r["geom_wkb"]))
     assert abs(karea(g) - n * n * w * w) < 1e-9
     assert abs(r["area"] - n * n * w * w) < 1e-9
+
+
+@pytest.mark.parametrize("n", [128, 129, 130])
+def test_raster_polygonize_partial_edge_tiles(spark, n):
+    """Rasters whose side is not a multiple of the tile: the partial last
+    row and column of tiles count toward the merge-round bound (130×130
+    single-value used to fail with ``fan-in bound violated``)."""
+    from nettopologysuite_spark.engine.zonal import raster_polygonize
+
+    px = spark.range(n * n).selectExpr(
+        f"id % {n} AS ix", f"id DIV {n} AS iy", "CAST(3 AS LONG) AS value"
+    )
+    out = raster_polygonize(px, n=n).collect()
+    assert [(r["value"], r["n_pixels"]) for r in out] == [(3, n * n)]
+
+
+def test_null_text_docs_have_no_grams_or_pairs(spark):
+    """Null text yields no bigram rows, so null docs never become MinHash
+    candidates (two of them would otherwise share the NULL gram)."""
+    from nettopologysuite_spark.engine.dedup import minhash_lsh_pairs, word_bigrams
+
+    text = "the quick brown fox jumps over the lazy dog"
+    docs = spark.createDataFrame(
+        [(1, None), (2, None), (3, text), (4, text), (5, "hi")],
+        "doc_id long, text string",
+    )
+    grams = word_bigrams(docs).collect()
+    assert {r["_id"] for r in grams} == {3, 4, 5}
+    assert all(r["gram"] is not None for r in grams)
+    pairs = {(r["d1"], r["d2"]) for r in minhash_lsh_pairs(docs).collect()}
+    assert pairs == {(3, 4)}
